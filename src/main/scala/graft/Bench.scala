@@ -594,7 +594,7 @@ object Bench {
     // excluded from every aggregate: a throw measured as a near-zero
     // "time" would silently DEFLATE total and vs_duckdb with no trace
     // (the published line would read as a phantom speedup)
-    // The checkpoint-heavy operators (dedup/ANN materializeOnce) leave
+    // The checkpoint-heavy operators (dedup/ANN Materialize.once) leave
     // their blocks registered after the query's plan is consumed — by
     // design for the returned lazy frame, but across a 92-query × reps
     // session the leaked blocks accumulate into GBs of storage pressure

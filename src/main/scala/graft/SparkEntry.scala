@@ -1347,7 +1347,7 @@ object SparkEntry {
     * with ≥ BpeTrainRounds distinct adjacent pairs satisfies it; the
     * generator corpora hold thousands. Final state
     * stays persisted for the two total aggregates; the bench's
-    * dropLeakedBlocks reclaims it between queries (the materializeOnce
+    * dropLeakedBlocks reclaims it between queries (the Materialize.once
     * convention). */
   private def bpeTrainQ(s: SparkSession, dir: String): DataFrame = {
     val words = t(s, dir, "documents")

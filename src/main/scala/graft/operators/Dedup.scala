@@ -233,40 +233,21 @@ object Dedup {
     if (files.isEmpty || files.length >= parts ||
         !files.forall(_.endsWith(".parquet"))) return df
     val hconf = df.sparkSession.sparkContext.hadoopConfiguration
-    val rowGroups =
-      try files.iterator.map { f =>
+    val rowGroups = files.iterator.map { f =>
+      try {
         val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
           new org.apache.hadoop.fs.Path(f), hconf)
         val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
         try r.getRowGroups.size() finally r.close()
-      }.sum
-      catch { case _: Throwable => parts } // unreadable footer: assume fine
+      } catch {
+        case scala.util.control.NonFatal(e) => // unreadable footer: assume fine
+          org.slf4j.LoggerFactory.getLogger(getClass).debug(
+            s"fanOutDense footer census fell back to no repartition: $f: $e")
+          parts
+      }
+    }.sum
     if (rowGroups >= parts) df else df.repartition(parts, key)
   }
-
-  /** Materialize a multi-consumer intermediate (sketch/signature/digest
-    * frames: read by a probe action AND the main plan) exactly once.
-    *
-    * Local mode (tests, single-node runs) uses eager `localCheckpoint`:
-    * truncated lineage, executor-local blocks — in one JVM there is no
-    * executor to lose. On a CLUSTER, localCheckpoint blocks are
-    * unreplicated executor-local storage with the lineage cut, so one
-    * executor loss mid-job makes the stage unrecoverable; there the frame
-    * persists MEMORY_AND_DISK with lineage INTACT — the first action
-    * populates the cache while running the kernel once, later consumers
-    * read blocks, and a lost block recomputes from lineage instead of
-    * failing the job.
-    *
-    * Lifecycle note for LONG-LIVED cluster drivers: persisted frames stay
-    * registered with the CacheManager until unpersisted (unlike
-    * localCheckpoint RDDs, which the ContextCleaner reclaims once
-    * unreferenced). A driver looping these operators over many corpora
-    * should call `spark.catalog.clearCache()` between pipelines after the
-    * results materialize — the same discipline `dropNearDuplicates`'
-    * `persistInput` documents. */
-  private[operators] def materializeOnce(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.isLocal) df.localCheckpoint(eager = true)
-    else df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
   /** MinHash-LSH near-duplicate pairs.
     *
@@ -428,7 +409,7 @@ object Dedup {
     val sigs =
       if (small) sigsBase
       else graft.StageTimer.timed("minhash.signature_checkpoint")(
-        materializeOnce(sigsBase))
+        graft.Materialize.once(sigsBase))
     val digests =
       if (withDigest) Some(sigs.select(col("id"), col("__dig"))) else None
 
@@ -737,7 +718,7 @@ object Dedup {
       if (withDigest)
         base.select(col("id"), shExpr, unhex(sha2(col("t"), 256)).as("__dig"))
       else base.select(col("id"), shExpr)
-    val sketched = if (small) sketchedBase else materializeOnce(sketchedBase)
+    val sketched = if (small) sketchedBase else graft.Materialize.once(sketchedBase)
     val digests =
       if (withDigest) Some(sketched.select(col("id"), col("__dig"))) else None
 
@@ -866,7 +847,7 @@ object Dedup {
       smallPlan(docs.select(col(idCol), col(textCol)), digestMinBytes)
     val keyed =
       if (lazyBytes) docs.select(col(idCol).as("__vid"), col(textCol).as("__k"))
-      else materializeOnce(docs.select(col(idCol).as("__vid"),
+      else graft.Materialize.once(docs.select(col(idCol).as("__vid"),
         sha2(col(textCol).cast("string"), 256).as("__k")))
     // SHUFFLE_HASH above the gate: same digest-join shape as
     // [[minhashPairsVerified]] — the keyed side is corpus-row-count-
@@ -1340,7 +1321,7 @@ object Dedup {
             .select(col(idCol).as("__id"), col(textCol).as("__t")),
             col("__id"))
             .select(col("__id"), unhex(sha2(col("__t"), 256)).as("__dig"))
-            .transform(materializeOnce)
+            .transform(graft.Materialize.once(_))
           val mins = digs.groupBy("__dig")
             .agg(min(col("__id")).as("__minid"), count(lit(1)).as("__n"))
             .filter(col("__n") >= 2)
@@ -1365,7 +1346,7 @@ object Dedup {
           val sigs = fanOut(in.filter(eligible)
             .select(col(idCol).as("__id"), col(textCol).as("__t")), col("__id"))
             .select(col("__id"), sig.as("__sig"))
-            .transform(materializeOnce)
+            .transform(graft.Materialize.once(_))
           val mins = sigs.groupBy("__sig")
             .agg(min(col("__id")).as("__minid"), count(lit(1)).as("__n"))
             .filter(col("__n") >= 2)
@@ -1474,7 +1455,7 @@ object Dedup {
       // caller-derived) text column twice per row — once for the filter,
       // once for the key — where one projection shares the evaluation
       // through codegen subexpression elimination.
-      val members = materializeOnce(fanOut(docs
+      val members = graft.Materialize.once(fanOut(docs
         .select(col(idCol).as("__id"), col(textCol).as("__t"),
           coalesce(col(scoreCol).cast("double"),
             lit(Double.NegativeInfinity)).as("__s")), col("__id"))
@@ -1584,7 +1565,7 @@ object Dedup {
     val spansRaw = docs
       .select(col(idCol), explode(wordNgrams(col(textCol), n)).as("__span"))
       .select(col(idCol), spanKey.as("__k"))
-    val spans = if (hashed) materializeOnce(spansRaw) else spansRaw
+    val spans = if (hashed) graft.Materialize.once(spansRaw) else spansRaw
     // span sets are per-doc distinct already (wordNgrams distincts), so
     // counting rows per key counts documents — no count-distinct Expand
     val sharedKeys = spans.groupBy("__k")
@@ -1826,7 +1807,7 @@ object Dedup {
     // and both join sides read fixed-width hash blocks (id + ~tokens
     // hash pairs), never text. fanOut first: the kernel is CPU-bound
     // and a single-file test corpus arrives as one split.
-    val withWh = materializeOnce(fanOut(docs
+    val withWh = graft.Materialize.once(fanOut(docs
       .select(col(idCol).as("__id"),
         org.apache.spark.sql.graft.ColumnBridge.column(
           graft.functions.expressions.WordWindowHashes(

@@ -121,7 +121,7 @@ object MinHashIndex {
 
   /** Build (or rebuild) the index from a corpus. The signature kernel is
     * the dominant cost and feeds BOTH tables, so the signed frame is
-    * materialized once ([[Dedup.materializeOnce]] — fixed-width rows,
+    * materialized once ([[graft.Materialize.once]] — fixed-width rows,
     * never text) instead of re-running the kernel per write. */
   def write(
       repo: PqRepo,
@@ -137,7 +137,7 @@ object MinHashIndex {
       // (hundreds at real 100 TB deployments), not to the corpus
       geometry: Geometry = Geometry(
         shingleK = 5, numHashes = 64, bands = 16, buckets = 16)): Unit = {
-    val perDoc = Dedup.materializeOnce(signed(docs, idCol, textCol, geometry))
+    val perDoc = graft.Materialize.once(signed(docs, idCol, textCol, geometry))
     // bucket-clustering of the layout write (one file per bucket
     // directory instead of `buckets × shuffle.partitions` fragments —
     // measured 54 s/rep → ~6 s on the streamed sf0.1 query) now lives in
@@ -165,10 +165,11 @@ object MinHashIndex {
     * buckets the new text never hashes into — the same
     * survives-outside-the-rewrite-scope corruption
     * [[Similarity.appendToIvfIndex]]'s moved-id guard exists for, and
-    * the same remedy: `checkChanged` (default on) joins the batch's
-    * digests against the indexed ones (thin columns, nothing text-sized
-    * moves) and fails loudly on any mismatch; re-sign via [[write]] or
-    * feed provably append-only batches with `checkChanged = false`. */
+    * the same guard ([[Similarity.unchangedGuard]]): `checkChanged`
+    * (default on) joins the batch's digests against the indexed ones
+    * (thin columns, nothing text-sized moves) and fails loudly on any
+    * mismatch before either merge writes; re-sign via [[write]] or feed
+    * provably append-only batches with `checkChanged = false`. */
   def append(
       repo: PqRepo,
       batch: DataFrame,
@@ -178,47 +179,34 @@ object MinHashIndex {
       name: String,
       checkChanged: Boolean = true): Unit = {
     val g = geometry(repo, schema, name)
-    val perDoc = Dedup.materializeOnce(signed(batch, idCol, textCol, g))
-    val docRows = withDocBucket(perDoc, g)
-    val bandR = bandRows(perDoc, g)
-    // the changed-content guard and BOTH merges' affected-partition
-    // collects are read-only micro-batch-sized jobs over the
-    // checkpointed signature blocks — overlapped three ways (r21, guide
-    // §2.6) they pay one job floor where the sequential shape paid up to
-    // three per streamed micro-batch
-    val (changedSample, affectedDocs, affectedBands) = graft.Par.run3(
-      if (!checkChanged) Array.empty[org.apache.spark.sql.Row]
-      else repo.table(schema, docsTable(name))
-        .select(col("id"), col("dig").as("__old"))
-        .join(perDoc.select(col("id"), col("dig")), Seq("id"))
-        .filter(!(col("__old") <=> col("dig")))
-        .select(col("id")).limit(5).collect(), // bounded: ≤5
-      docRows.select(col("dbucket")).distinct().collect(), // ≤ buckets
-      bandR.select(col("bucket")).distinct().collect()) // ≤ buckets
-    if (changedSample.nonEmpty) {
-      val shown = changedSample.map(_.get(0)).mkString(", ")
-      throw new IllegalStateException(
+    val perDoc = graft.Materialize.once(signed(batch, idCol, textCol, g))
+    // the changed-content guard runs against the checkpointed signatures
+    // both merges' rows derive from, ONCE, as the pre-write step of
+    // whichever merge asks first — the other merge's pre-write waits on
+    // the same lazy val, so NEITHER merge writes before it passed (a
+    // failed guard re-runs in the waiting merge and fails it too)
+    lazy val unchanged = Similarity.unchangedGuard(checkChanged,
+      repo.table(schema, docsTable(name)), "dig", showValues = false) {
+      shown =>
         s"MinHashIndex.append($schema/$name): batch re-ingests ids whose " +
-          s"content changed [$shown${if (changedSample.length == 5) ", …" else ""}] — " +
-          "their stale band rows would survive in buckets this merge " +
-          "never rewrites. Rebuild via MinHashIndex.write, or pass " +
-          "checkChanged = false only for provably append-only feeds")
-    }
-    // bucket-clustering of the merged rewrite (touched directories come
-    // back as one file, not per-task fragments that compound across
-    // micro-batches) lives in the repo's partition-scoped merge engine
-    // itself (r20) — shared by every index family. The two merges touch
-    // DISJOINT tables (each with its own manifest-recorded crash
-    // recovery), so they run OVERLAPPED (guide §2.6); the crash window is
-    // unchanged — a replay re-merges both tables idempotently exactly as
-    // it did when a crash fell between the sequential merges.
+          s"content changed [$shown] — their stale band rows would " +
+          "survive in buckets this merge never rewrites. Rebuild via " +
+          "MinHashIndex.write, or pass checkChanged = false only for " +
+          "provably append-only feeds"
+    }(perDoc)
+    // the two merges touch DISJOINT tables (each with its own
+    // manifest-recorded crash recovery), so they run OVERLAPPED (guide
+    // §2.6); a replay re-merges both tables idempotently exactly as it
+    // did when a crash fell between sequential merges
     graft.Par.run2(
-      repo.mergePartitionedKnownAffected(docRows, schema, docsTable(name),
-        keys = Seq("id", "dbucket"), partitionCols = Seq("dbucket"),
-        affected = affectedDocs.toSeq),
-      repo.mergePartitionedKnownAffected(bandR, schema, bandsTable(name),
+      repo.mergePartitioned(withDocBucket(perDoc, g), schema,
+        docsTable(name), keys = Seq("id", "dbucket"),
+        partitionCols = Seq("dbucket"), modified = None,
+        allowMissingColumns = false, preWrite = _ => unchanged),
+      repo.mergePartitioned(bandRows(perDoc, g), schema, bandsTable(name),
         keys = Seq("id", "band", "bh", "bucket"),
-        partitionCols = Seq("bucket"), affected = affectedBands.toSeq))
+        partitionCols = Seq("bucket"), modified = None,
+        allowMissingColumns = false, preWrite = _ => unchanged))
   }
 
   /** Candidate (batch id, corpus id) collisions from the band tables:
@@ -278,7 +266,7 @@ object MinHashIndex {
     // the near path materializes the signed frame once because the
     // digest probe AND the band probe both read it
     val signedBatch =
-      if (needNear) Dedup.materializeOnce(signed(batch, idCol, textCol, g))
+      if (needNear) graft.Materialize.once(signed(batch, idCol, textCol, g))
       else batch.select(col(idCol).as("id"),
         unhex(sha2(col(textCol), 256)).as("dig"))
     // dropKnown's two-step shape, digests instead of text: the batch's

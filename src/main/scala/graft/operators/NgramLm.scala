@@ -93,11 +93,11 @@ object NgramLm {
           graft.functions.expressions.BigramCounts(
             ColumnBridge.expression(col("t")))))
           .as(Seq("bigram", "tf")))
-    val tf = Dedup.materializeOnce(docTf(docs))
+    val tf = graft.Materialize.once(docTf(docs))
     // LM bigram counts: vocabulary-sized after map-side combine;
     // materialized once — read by the total-N derivation AND the LM join.
     // Reference mode makes its own single pass over the reference corpus.
-    val cbg = Dedup.materializeOnce(
+    val cbg = graft.Materialize.once(
       reference.map(docTf(_)).getOrElse(tf)
         .groupBy("bigram").agg(sum(col("tf")).as("c_bg")))
     // N = total bigram occurrences, derived from the counts frame (no
@@ -111,7 +111,7 @@ object NgramLm {
     // per-doc score: tf·s per bigram TYPE (both ≤ long, product ≤ 63·|doc|).
     // LEFT join so reference-mode unseen bigrams survive to the smoothing
     // coalesce (self mode never produces a null s)
-    val scored = Dedup.materializeOnce(
+    val scored = graft.Materialize.once(
       (if (broadcastLm) tf.join(broadcast(lm), Seq("bigram"), "left")
        else tf.join(lm.hint("shuffle_hash"), Seq("bigram"), "left"))
         .crossJoin(nTotal)

@@ -504,34 +504,51 @@ object Similarity {
     val index = readIvfIndex(repo, schema, name)
     val assigned = assignClusters(
       batch.select(col(idCol).as("id"), col(vecCol).as("v")), index.centroids)
-    // the read-only moved-id guard and the merge's affected-partition
-    // collect OVERLAP (r21, guide §2.6): both are small driver-sequenced
-    // jobs on the streamed micro-batch path, and the merge cannot write
-    // before the guard passes either way — overlapping the reads pays
-    // one job floor instead of two per micro-batch
-    val (movedSample, affected) = graft.Par.run2(
-      if (!checkMoved) Array.empty[org.apache.spark.sql.Row]
-      else index.assigned.select(col("id"), col("cluster").as("__old"))
-        .join(assigned.select(col("id"), col("cluster")), Seq("id"))
-        .filter(col("__old") =!= col("cluster"))
-        .select(col("id"), col("__old"), col("cluster"))
-        .limit(5).collect(), // bounded: ≤5 rows
-      assigned.select(col("cluster")).distinct().collect()) // ≤ nlist
-    if (movedSample.nonEmpty) {
-      val shown = movedSample.map(r =>
-        s"${r.get(0)}: ${r.get(1)} -> ${r.get(2)}").mkString(", ")
-      throw new IllegalStateException(
-        s"appendToIvfIndex($schema/$name): batch re-ingests ids whose " +
-          s"embeddings moved clusters [$shown${if (movedSample.length == 5) ", …" else ""}] — " +
-          "the stale rows would survive in partitions this merge never " +
-          "rewrites. Use reassignIvfIndex (bounded rewrite of the old + " +
-          "new cluster partitions), re-train via ivfBuild + " +
-          "writeIvfIndex if the corpus drifted, or pass checkMoved = " +
-          "false only for provably append-only feeds")
-    }
-    repo.mergePartitionedKnownAffected(assigned, schema, s"${name}_ivf",
+    repo.mergePartitioned(assigned, schema, s"${name}_ivf",
       keys = Seq("id", "cluster"), partitionCols = Seq("cluster"),
-      affected = affected.toSeq)
+      modified = None, allowMissingColumns = false,
+      preWrite = unchangedGuard(checkMoved, index.assigned, "cluster",
+        showValues = true) { shown =>
+        s"appendToIvfIndex($schema/$name): batch re-ingests ids whose " +
+          s"embeddings moved clusters [$shown] — the stale rows would " +
+          "survive in partitions this merge never rewrites. Use " +
+          "reassignIvfIndex (bounded rewrite of the old + new cluster " +
+          "partitions), re-train via ivfBuild + writeIvfIndex if the " +
+          "corpus drifted, or pass checkMoved = false only for provably " +
+          "append-only feeds"
+      })
+  }
+
+  /** Batch ids whose STORED `value` differs from the batch's, as (id,
+    * __old, value) rows — the thin two-column join (nothing vector- or
+    * text-sized moves) behind every index append's moved/changed guard
+    * and [[reassignIvfIndex]]'s scope widening. */
+  private[operators] def changedIds(
+      stored: DataFrame, batch: DataFrame, value: String): DataFrame =
+    stored.select(col("id"), col(value).as("__old"))
+      .join(batch.select(col("id"), col(value)), Seq("id"))
+      .filter(!(col("__old") <=> col(value)))
+
+  /** The index appends' pre-write guard, run by the merge against its
+    * materialized batch before any file is touched: a batch that
+    * re-ingests ids whose stored `value` changed would leave stale rows
+    * in partitions the merge never rewrites, so it fails loudly instead
+    * — `message` receives up to five of those ids (with their old → new
+    * values when `showValues`). Disabled, it checks nothing; it never
+    * widens the rewrite scope. */
+  private[operators] def unchangedGuard(
+      enabled: Boolean, stored: => DataFrame, value: String,
+      showValues: Boolean)(message: String => String
+  ): DataFrame => Seq[org.apache.spark.sql.Row] = batch => {
+    val sample =
+      if (!enabled) Array.empty[org.apache.spark.sql.Row]
+      else changedIds(stored, batch, value).limit(5).collect() // bounded: ≤5
+    if (sample.nonEmpty)
+      throw new IllegalStateException(message(sample.map(r =>
+        if (showValues) s"${r.get(0)}: ${r.get(1)} -> ${r.get(2)}"
+        else s"${r.get(0)}").mkString(", ") +
+        (if (sample.length == 5) ", …" else "")))
+    Nil
   }
 
   /** Re-ingest a batch whose embeddings may have MOVED clusters — the
@@ -542,11 +559,12 @@ object Similarity {
     * the cluster its new embedding assigns to, and its stale row is
     * deleted from the old cluster partition.
     *
-    * Scale shape — a bounded rewrite, not a rebuild: the detection join
-    * ((id, cluster) both sides — column-pruned thin scans, nothing
-    * vector-sized moves) yields the old clusters of moved ids; those
-    * partitions plus the batch's new clusters (≤ 2·nlist values,
-    * collected driver-side) form the rewrite scope handed to the repo's
+    * Scale shape — a bounded rewrite, not a rebuild: the appends'
+    * moved-id join ([[changedIds]] — column-pruned thin scans, nothing
+    * vector-sized moves) yields the old clusters of moved ids, and as
+    * the merge's pre-write step it widens the rewrite scope (the batch's
+    * new clusters) by those partitions instead of failing — ≤ 2·nlist
+    * values, collected driver-side, handed to the repo's
     * manifest-recorded partition swap. Untouched cluster partitions are
     * never read or rewritten (byte-identical on disk — spec-verified),
     * and every crash point recovers exactly like [[appendToIvfIndex]]'s.
@@ -564,15 +582,12 @@ object Similarity {
     val index = readIvfIndex(repo, schema, name)
     val assigned = assignClusters(
       batch.select(col(idCol).as("id"), col(vecCol).as("v")), index.centroids)
-    val oldClusters = index.assigned.select(col("id"), col("cluster"))
-      .join(assigned.select(col("id"), col("cluster").as("__new")), Seq("id"))
-      .filter(col("cluster") =!= col("__new"))
-      .select(col("cluster"))
-    val affected = assigned.select(col("cluster"))
-      .unionByName(oldClusters).distinct().collect() // bounded: ≤ 2·nlist
-    repo.mergeIntoPartitions(assigned, schema, s"${name}_ivf",
+    repo.mergePartitioned(assigned, schema, s"${name}_ivf",
       keys = Seq("id"), partitionCols = Seq("cluster"),
-      affected = affected.toSeq)
+      modified = None, allowMissingColumns = false, preWrite = b =>
+        changedIds(index.assigned, b, "cluster")
+          .select(col("__old").as("cluster")).distinct()
+          .collect().toSeq) // bounded: ≤ nlist
   }
 
   /** Incrementally append/upsert a batch into a persisted quantized
@@ -623,13 +638,17 @@ object Similarity {
     * partitioned scan, cluster-prunable by [[ivfSearch]]'s probe join. */
   def readIvfIndex(
       repo: graft.sources.PqRepo, schema: String, name: String): IvfIndex = {
-    val cents = repo.table(schema, s"${name}_ivf_centroids")
-      .collect()
-      .map(r => r.getInt(0) -> r.getSeq[Double](1).toSeq)
-      .sortBy(_._1)
-      .toSeq
-    IvfIndex(cents, repo.table(schema, s"${name}_ivf"))
+    IvfIndex(readCentroids(repo, schema, s"${name}_ivf_centroids"),
+      repo.table(schema, s"${name}_ivf"))
   }
+
+  /** A persisted (cid, cv) centroid side table, sorted by cid —
+    * index-sized (≤ numCentroids × dim doubles). */
+  private def readCentroids(
+      repo: graft.sources.PqRepo, schema: String, table: String
+  ): Seq[(Int, Seq[Double])] =
+    repo.table(schema, table).collect()
+      .map(r => r.getInt(0) -> r.getSeq[Double](1).toSeq).sortBy(_._1).toSeq
 
   /** Sampled recall@k observability result — the ANN sibling of
     * Packing's MixStats / Dedup's ComponentsStats: `recall` =
@@ -839,7 +858,7 @@ object Similarity {
   /** [[semanticDedup]] plus the label-propagation
     * [[Dedup.ComponentsStats]] — the [[dropEmbeddingDuplicatesWithStats]]
     * convention. The clustered frame is materialized once
-    * ([[Dedup.materializeOnce]]): seeding, refinement, assignment, and
+    * ([[graft.Materialize.once]]): seeding, refinement, assignment, and
     * pairing all scan it, and each would otherwise replay the collapse
     * shuffle. */
   def semanticDedupWithStats(
@@ -865,7 +884,7 @@ object Similarity {
     // one distinct-vector frame feeds every downstream scan; the id for
     // the seeding hash draw is the group's smallest member id (any
     // deterministic id works — it only seeds the Lehmer priority)
-    val qd = Dedup.materializeOnce(byVec.select(col("v"), col("ids"),
+    val qd = graft.Materialize.once(byVec.select(col("v"), col("ids"),
       KMeans.latticeQuantize(col("v"), 64).as("q"),
       array_min(col("ids")).cast("long").as("id")))
     val seeds = KMeans.parallelSeeds(qd, "id", "q", k)
@@ -1171,6 +1190,22 @@ object Similarity {
       .drop("__cv")
   }
 
+  /** (id, cluster, codes) of an IVF assignment under frozen codebooks —
+    * the one encoder of [[writeIvfPqIndex]] and [[appendToIvfPqIndex]]:
+    * a residual (IVFADC) index quantizes x − centroid[cluster], a raw one
+    * the vector itself. */
+  private def encodeAssigned(
+      assigned: DataFrame,
+      centroids: Seq[(Int, Seq[Double])],
+      books: PqCodebooks,
+      residual: Boolean): DataFrame = {
+    val (src, v) =
+      if (residual) (withResidual(assigned, centroids), "__rv")
+      else (assigned, "v")
+    src.select(col("id"), col("cluster"),
+      VectorFunctions.pqEncode(col(v), books.books).as("codes"))
+  }
+
   /** [[pqTrain]] over RESIDUALS x − centroid[cluster] of an IVF
     * assignment — the classical IVFADC codebook: residuals concentrate
     * in a ball around the origin, so the ksub codewords spend their
@@ -1312,13 +1347,7 @@ object Similarity {
     // 1-row meta table so read/search/append recover the layout from
     // disk — a caller-supplied flag could silently mis-decode an index
     // written the other way.
-    val coded =
-      if (residual)
-        withResidual(index.assigned, index.centroids)
-          .select(col("id"), col("cluster"),
-            VectorFunctions.pqEncode(col("__rv"), books.books).as("codes"))
-      else index.assigned.select(col("id"), col("cluster"),
-        VectorFunctions.pqEncode(col("v"), books.books).as("codes"))
+    val coded = encodeAssigned(index.assigned, index.centroids, books, residual)
     // the corpus-sized coded write and the three geometry-sized side
     // tables are disjoint outputs: overlapped (guide §2.6) the side
     // writes' per-job floors hide under the coded scan instead of
@@ -1353,11 +1382,7 @@ object Similarity {
     // three geometry-sized collects over disjoint side tables, overlapped
     // (guide §2.6): one per-job floor instead of three in sequence
     val (cents, books, residual) = graft.Par.run3(
-      repo.table(schema, s"${name}_ivfpq_centroids")
-        .collect()
-        .map(r => r.getInt(0) -> r.getSeq[Double](1).toSeq)
-        .sortBy(_._1)
-        .toSeq,
+      readCentroids(repo, schema, s"${name}_ivfpq_centroids"),
       booksFromDF(repo.table(schema, s"${name}_ivfpq_books")),
       scala.util.Try(
         repo.table(schema, s"${name}_ivfpq_meta")
@@ -1389,40 +1414,21 @@ object Similarity {
       readIvfPqIndex(repo, schema, name)
     val assigned = assignClusters(
       batch.select(col(idCol).as("id"), col(vecCol).as("v")), cents)
-    // moved-id guard ∥ affected-partition collect (r21, guide §2.6) —
-    // the appendToIvfIndex rationale: two read-only micro-batch jobs,
-    // one job floor
-    val (movedSample, affected) = graft.Par.run2(
-      if (!checkMoved) Array.empty[org.apache.spark.sql.Row]
-      else coded.select(col("id"), col("cluster").as("__old"))
-        .join(assigned.select(col("id"), col("cluster")), Seq("id"))
-        .filter(col("__old") =!= col("cluster"))
-        .select(col("id"), col("__old"), col("cluster"))
-        .limit(5).collect(), // bounded: ≤5 rows
-      assigned.select(col("cluster")).distinct().collect()) // ≤ nlist
-    if (movedSample.nonEmpty) {
-      val shown = movedSample.map(r =>
-        s"${r.get(0)}: ${r.get(1)} -> ${r.get(2)}").mkString(", ")
-      throw new IllegalStateException(
-        s"appendToIvfPqIndex($schema/$name): batch re-ingests ids whose " +
-          s"embeddings moved clusters [$shown${if (movedSample.length == 5) ", …" else ""}] — " +
-          "stale codes would survive in partitions this merge never " +
-          "rewrites. Re-train via ivfBuild + pqTrain + writeIvfPqIndex " +
-          "if the corpus drifted, or pass checkMoved = false only for " +
-          "provably append-only feeds")
-    }
     // encode with the layout the index was WRITTEN with: a residual
     // index's batch quantizes x − centroid under the same frozen
     // geometry (the flag comes from the persisted meta, never the caller)
-    val codedBatch =
-      if (residual)
-        withResidual(assigned, cents).select(col("id"), col("cluster"),
-          VectorFunctions.pqEncode(col("__rv"), books.books).as("codes"))
-      else assigned.select(col("id"), col("cluster"),
-        VectorFunctions.pqEncode(col("v"), books.books).as("codes"))
-    repo.mergePartitionedKnownAffected(codedBatch, schema, s"${name}_ivfpq",
+    repo.mergePartitioned(encodeAssigned(assigned, cents, books, residual),
+      schema, s"${name}_ivfpq",
       keys = Seq("id", "cluster"), partitionCols = Seq("cluster"),
-      affected = affected.toSeq)
+      modified = None, allowMissingColumns = false,
+      preWrite = unchangedGuard(checkMoved, coded, "cluster",
+        showValues = true) { shown =>
+        s"appendToIvfPqIndex($schema/$name): batch re-ingests ids whose " +
+          s"embeddings moved clusters [$shown] — stale codes would survive " +
+          "in partitions this merge never rewrites. Re-train via ivfBuild " +
+          "+ pqTrain + writeIvfPqIndex if the corpus drifted, or pass " +
+          "checkMoved = false only for provably append-only feeds"
+      })
   }
 
   /** IVF-PQ search over a persisted index: each query probes its

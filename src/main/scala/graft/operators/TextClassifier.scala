@@ -87,7 +87,7 @@ object TextClassifier {
     // model counts: ONE exchange over the training corpus, keyed
     // (label, term), map-side combined; materialized once — read by the
     // class-totals derivation AND the scoring join
-    val counts = Dedup.materializeOnce(
+    val counts = graft.Materialize.once(
       tf(train, Seq(labelCol -> "label"))
         .groupBy("label", "term").agg(sum(col("tf")).as("c"))
         .filter(col("label").isNotNull))

@@ -93,7 +93,7 @@ object TfIdf {
     *
     * Scale shape: per-document tf comes from ONE execution of the
     * tokenizer kernel — the tf frame is materialized once
-    * ([[Dedup.materializeOnce]]) before fanning into the vocabulary and
+    * ([[graft.Materialize.once]]) before fanning into the vocabulary and
     * coverage branches, because the r13 two-branch plan re-executed the
     * kernel per branch (ReusedExchange shared the shuffle but not the
     * tokenize, and at 100 TB tokenization is the dominant CPU). Corpus
@@ -126,7 +126,7 @@ object TfIdf {
       org.apache.spark.sql.graft.ColumnBridge.column(
         graft.functions.expressions.TokenCounts(
           org.apache.spark.sql.graft.ColumnBridge.expression(lower(c)))))
-    val tf = Dedup.materializeOnce(Dedup.fanOut(
+    val tf = graft.Materialize.once(Dedup.fanOut(
       docs.select(col(idCol).as("id"), col(textCol).as("t")),
       col("id"))
       .select(col("id"),
@@ -180,7 +180,7 @@ object TfIdf {
       textCol: String,
       topN: Int = 100): DataFrame = {
     require(topN > 0, s"topN must be positive, got $topN")
-    def counts(df: DataFrame, as: String) = Dedup.materializeOnce(
+    def counts(df: DataFrame, as: String) = graft.Materialize.once(
       Dedup.fanOut(
         df.select(col(idCol).as("id"), lower(col(textCol)).as("t")),
         col("id"))

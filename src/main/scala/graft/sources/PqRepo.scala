@@ -4,6 +4,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit, max, min}
 import org.apache.spark.sql.types.MetadataBuilder
+import org.apache.spark.storage.StorageLevel
+import scala.jdk.CollectionConverters._
 
 import graft.sync.Modified
 
@@ -574,6 +576,20 @@ final case class PqRepo(spark: SparkSession, dataDir: String) {
     * with coarse keys) and become an OR-of-conjunctions source filter, so
     * the current-side scan partition-prunes.
     *
+    * Exactness by construction: `updates` is materialized ONCE
+    * ([[graft.Materialize.once]], lazily — the affected-partition collect
+    * is the action that fills it, so no extra job runs), and the rewrite
+    * scope, the key match and the written rows all read that one
+    * evaluation. A non-deterministic batch (a random or time-dependent
+    * partition value, a UDF marked non-deterministic) is therefore safe:
+    * every partition the write reaches is in scope, so no partition is
+    * ever replaced by the batch rows alone. This holds in one JVM (local
+    * mode); on a cluster the batch persists with its lineage, and a
+    * partition recomputed from it (a lost executor, or the pre-write step
+    * and the scope collect first reading one partition on two executors)
+    * draws new values — materialize a non-deterministic batch upstream
+    * there.
+    *
     * Each affected partition is written to a temp table then swapped in
     * via sidecar renames (old dir → `_old_*` sidecar, new dir into place,
     * sidecar deleted), so EVERY crash point leaves the partition's old or
@@ -601,16 +617,48 @@ final case class PqRepo(spark: SparkSession, dataDir: String) {
       modified: Option[String] = None,
       allowMissingColumns: Boolean = false
   ): Path = {
-    require(keys.nonEmpty, "merge needs at least one key column")
-    require(partitionCols.nonEmpty && partitionCols.forall(keys.contains),
+    require(partitionCols.forall(keys.contains),
       s"partition columns $partitionCols must be a subset of the merge " +
         s"keys $keys (otherwise a key could move partitions and its old " +
         "row would survive)")
+    mergePartitioned(updates, schema, table, keys, partitionCols, modified,
+      allowMissingColumns, _ => Nil)
+  }
+
+  /** [[mergePartitioned]] with a `preWrite` step for the index appends.
+    * `preWrite` receives the MATERIALIZED batch and runs overlapped with
+    * the affected-partition collect (guide §2.6 — one job floor, not
+    * two); it may throw, which aborts the merge before any file is
+    * touched, or return extra partition tuples (rows named like
+    * `partitionCols`) to widen the rewrite scope.
+    *
+    * The widening lifts the `partitionCols ⊆ keys` rule: IVF reassignment
+    * merges on `id` alone, so a re-ingested id vanishes from its OLD
+    * cluster partition while landing in its new one. The caller then owns
+    * the safety obligation that rule otherwise enforces — every current
+    * row whose key matches a batch row must live in an affected or
+    * returned partition, or stale rows survive outside the rewrite
+    * scope. */
+  private[graft] def mergePartitioned(
+      updates: DataFrame,
+      schema: String,
+      table: String,
+      keys: Seq[String],
+      partitionCols: Seq[String],
+      modified: Option[String],
+      allowMissingColumns: Boolean,
+      preWrite: DataFrame => Seq[org.apache.spark.sql.Row]
+  ): Path = {
+    require(keys.nonEmpty, "merge needs at least one key column")
+    require(partitionCols.nonEmpty, "mergePartitioned needs partition columns")
     val dest = tablePath(schema, table)
     val f = fs(dest)
     // a manifest from a crashed previous merge — or a whole-table promote
     // that crashed mid-swap: roll both forward first, so the current-side
-    // read below sees a consistent table
+    // read below sees a consistent table (a mid-swap table has partitions
+    // parked as reader-invisible `_old_` sidecars, and clobbering the tmp
+    // layout + manifest below would lose a partition whose merged data
+    // still lived only in tmp)
     recoverWrite(schema, table)
     recoverMergePartitioned(schema, table)
     if (!f.exists(dest))
@@ -628,143 +676,66 @@ final case class PqRepo(spark: SparkSession, dataDir: String) {
       allowMissingColumns, s"mergePartitioned($schema/$table)",
       partitionScoped = true)
 
-    // the partitions this batch touches: a driver-side list of tuples
-    val affected = updates.select(partitionCols.map(col): _*).distinct().collect()
-    mergeIntoPartitions(updates, schema, table, keys, partitionCols,
-      affected.toSeq, modified, allowMissingColumns, Some(current))
-  }
+    // a batch the caller already cached stays cached: release only the
+    // blocks this merge created (cluster mode persists; local checkpoint
+    // blocks go with the frame)
+    val callerCached = updates.storageLevel != StorageLevel.NONE
+    val batch = graft.Materialize.once(updates, eager = false)
+    try {
+      // the partitions this batch touches: a driver-side list of tuples
+      val (affected, extra) = graft.Par.run2(
+        batch.select(partitionCols.map(col): _*).distinct().collect().toSeq,
+        preWrite(batch))
+      val scope = (affected ++ extra).distinct
+      if (scope.isEmpty) return dest
+      val touchFilter = scope.map { row =>
+        partitionCols.zipWithIndex
+          .map { case (c, i) => col(c) <=> lit(row.get(i)) }
+          .reduce(_ && _)
+      }.reduce(_ || _)
 
-  /** [[mergePartitioned]] for a caller that ALREADY collected the
-    * updates' distinct partition tuples (r21, guide §2.6): the index
-    * append paths overlap that collect with their read-only moved-id
-    * guard instead of paying the two job floors sequentially — one fewer
-    * sequential job per streamed micro-batch. `affected` MUST be exactly
-    * `updates.select(partitionCols).distinct()` (a superset with
-    * phantom tuples would delete untouched partitions via the
-    * hasNew=false manifest path only if they exist-and-merge-empty —
-    * i.e. never for true supersets of real data, but the contract is
-    * exactness; a SUBSET would leave stale rows outside the rewrite
-    * scope). Same recovery, validation, and crash protocol as
-    * [[mergePartitioned]]. */
-  private[graft] def mergePartitionedKnownAffected(
-      updates: DataFrame,
-      schema: String,
-      table: String,
-      keys: Seq[String],
-      partitionCols: Seq[String],
-      affected: Seq[org.apache.spark.sql.Row],
-      modified: Option[String] = None,
-      allowMissingColumns: Boolean = false
-  ): Path = {
-    require(keys.nonEmpty, "merge needs at least one key column")
-    require(partitionCols.nonEmpty && partitionCols.forall(keys.contains),
-      s"partition columns $partitionCols must be a subset of the merge " +
-        s"keys $keys (otherwise a key could move partitions and its old " +
-        "row would survive)")
-    val dest = tablePath(schema, table)
-    val f = fs(dest)
-    recoverWrite(schema, table)
-    recoverMergePartitioned(schema, table)
-    if (!f.exists(dest))
-      return writePartitioned(updates, schema, table, partitionCols, modified)
-    val current = spark.read.parquet(dest.toString)
-    validateMergeSchema(current, updates, keys,
-      allowMissingColumns, s"mergePartitioned($schema/$table)",
-      partitionScoped = true)
-    mergeIntoPartitions(updates, schema, table, keys, partitionCols,
-      affected, modified, allowMissingColumns, Some(current))
-  }
+      // current rows of affected partitions only (PartitionFilters prune
+      // the rest before I/O), merged with the updates
+      val merged = cowMerge(current.filter(touchFilter), batch, keys,
+        allowMissingColumns)
 
-  /** The partition-scoped merge ENGINE, shared by [[mergePartitioned]]
-    * (affected = the updates' own partition tuples; `partitionCols ⊆
-    * keys` makes that sufficient) and by callers that merge on a key the
-    * partition value is NOT a function of — e.g. IVF reassignment, where
-    * a re-ingested id must vanish from its OLD cluster partition while
-    * landing in its new one. The CALLER owns the safety obligation the
-    * `partitionCols ⊆ keys` rule otherwise enforces: every current row
-    * whose key tuple matches an updates row must live in one of
-    * `affected`'s partitions, or stale rows survive outside the rewrite
-    * scope (exactly the corruption appendToIvfIndex's moved-id guard
-    * detects). Rewrites only `affected` partition dirs via the
-    * manifest-recorded crash-recoverable swap; untouched partitions are
-    * never read or rewritten. */
-  private[graft] def mergeIntoPartitions(
-      updates: DataFrame,
-      schema: String,
-      table: String,
-      keys: Seq[String],
-      partitionCols: Seq[String],
-      affected: Seq[org.apache.spark.sql.Row],
-      modified: Option[String] = None,
-      allowMissingColumns: Boolean = false,
-      // a caller that already resolved the destination (mergePartitioned's
-      // validation read) passes it here so the table is listed once per
-      // merge, not twice; None re-reads (direct engine callers). MUST have
-      // been created after recovery ran on this table.
-      currentFull: Option[DataFrame] = None
-  ): Path = {
-    val dest = tablePath(schema, table)
-    val f = fs(dest)
-    if (affected.isEmpty) return dest
-    // heal any crashed earlier promote or merge BEFORE reading current
-    // state or touching tmp/manifest: a mid-swap table has partitions
-    // parked as reader-invisible `_old_` sidecars, and clobbering the tmp
-    // layout + manifest below would permanently lose a partition whose
-    // merged data still lived only in tmp. mergePartitioned runs these at
-    // entry too (both are fast no-ops on a clean table), but direct
-    // engine callers — reassignIvfIndex — previously skipped them,
-    // contradicting its every-crash-point-recovers contract.
-    recoverWrite(schema, table)
-    recoverMergePartitioned(schema, table)
-    val touchFilter = affected.map { row =>
-      partitionCols.zipWithIndex
-        .map { case (c, i) => col(c) <=> lit(row.get(i)) }
-        .reduce(_ && _)
-    }.reduce(_ || _)
+      // write affected partitions to a tmp layout, then swap each
+      // directory. The merged frame is CLUSTERED on the partition columns
+      // first (r20, same rationale as [[writePartitioned]]): the union of
+      // current rows and updates arrives task-fragmented, and an
+      // unclustered dynamic-partition write would fragment every touched
+      // directory into per-task files that compound across micro-batch
+      // merges — the dominant cost of the streamed index-maintenance
+      // queries (measured: the sf0.1 MinHash stream at 54 s/rep
+      // un-clustered). r21: the clustering is the skew-safe AQE rebalance
+      // ([[clusterOnPartitions]]) — a hot partition value rewrites on
+      // several bounded tasks instead of one straggler.
+      val tmp = mergeTmpPath(schema, table)
+      if (f.exists(tmp)) f.delete(tmp, true)
+      stampModified(clusterOnPartitions(merged, partitionCols, cluster = true),
+          partitionCols, modified)
+        .write.mode("overwrite").partitionBy(partitionCols: _*).parquet(tmp.toString)
 
-    // current rows of affected partitions only (PartitionFilters prune the
-    // rest before I/O), merged with the updates
-    val current = currentFull.getOrElse(spark.read.parquet(dest.toString))
-      .filter(touchFilter)
-    val merged = cowMerge(current, updates, keys, allowMissingColumns)
+      // manifest AFTER the tmp write committed, BEFORE the first swap: its
+      // presence certifies the tmp layout is complete and records which
+      // partitions are in flight (hasNew=false ⇒ the merged partition came
+      // out empty and the destination dir's end state is "absent").
+      // hasNew entries come from LISTING the tmp layout — the names the
+      // writer actually created — never from re-rendering row values:
+      // value.toString can drift from the writer's path rendering (e.g.
+      // java.sql.Timestamp's trailing ".0"), and a drifted name would
+      // record hasNew=false for a partition whose merged data is sitting
+      // in tmp, silently discarding the whole update at cleanup
+      val newRels = listPartitionRelDirs(f, tmp, partitionCols.length)
+      val entries = newRels.map(_ -> true) ++
+        scope.map(partitionRelDir).filterNot(newRels.toSet).map(_ -> false)
+      writeMergeManifest(schema, table, entries)
 
-    // write affected partitions to a tmp layout, then swap each directory.
-    // The merged frame is CLUSTERED on the partition columns first (r20,
-    // same rationale as [[writePartitioned]]): the union of current rows
-    // and updates arrives task-fragmented, and an unclustered dynamic-
-    // partition write would fragment every touched directory into
-    // per-task files that compound across micro-batch merges — the
-    // dominant cost of the streamed index-maintenance queries (measured:
-    // the sf0.1 MinHash stream at 54 s/rep un-clustered). r21: the
-    // clustering is the skew-safe AQE rebalance ([[clusterOnPartitions]])
-    // — a hot partition value rewrites on several bounded tasks instead
-    // of one straggler.
-    val tmp = mergeTmpPath(schema, table)
-    if (f.exists(tmp)) f.delete(tmp, true)
-    stampModified(clusterOnPartitions(merged, partitionCols, cluster = true),
-        partitionCols, modified)
-      .write.mode("overwrite").partitionBy(partitionCols: _*).parquet(tmp.toString)
-
-    // manifest AFTER the tmp write committed, BEFORE the first swap: its
-    // presence certifies the tmp layout is complete and records which
-    // partitions are in flight (hasNew=false ⇒ the merged partition came
-    // out empty and the destination dir's end state is "absent").
-    // hasNew entries come from LISTING the tmp layout — the names the
-    // writer actually created — never from re-rendering row values:
-    // value.toString can drift from the writer's path rendering (e.g.
-    // java.sql.Timestamp's trailing ".0"), and a drifted name would
-    // record hasNew=false for a partition whose merged data is sitting in
-    // tmp, silently discarding the whole update at cleanup
-    val newRels = listPartitionRelDirs(f, tmp, partitionCols.length)
-    val computed = affected.map(partitionRelDir)
-    val entries = newRels.map(_ -> true) ++
-      computed.filterNot(newRels.toSet).map(_ -> false)
-    writeMergeManifest(schema, table, entries)
-
-    promoteMergedPartitions(f, tmp, dest, entries)
-    f.delete(tmp, true)
-    f.delete(mergeManifestPath(schema, table), false)
-    dest
+      promoteMergedPartitions(f, tmp, dest, entries)
+      f.delete(tmp, true)
+      f.delete(mergeManifestPath(schema, table), false)
+      dest
+    } finally if (!callerCached) batch.unpersist()
   }
 
   /** Roll an interrupted [[mergePartitioned]] forward from its committed
@@ -929,9 +900,18 @@ final case class PqRepo(spark: SparkSession, dataDir: String) {
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val node = mapper.createObjectNode()
     props.toSeq.sortBy(_._1).foreach { case (k, v) => node.put(k, v) }
+    writeFile(f, path, mapper.writeValueAsBytes(node))
+  }
+
+  private def writeFile(f: FileSystem, path: Path, bytes: Array[Byte]): Unit = {
     val out = f.create(path, true)
-    try out.write(mapper.writeValueAsBytes(node))
-    finally out.close()
+    try out.write(bytes) finally out.close()
+  }
+
+  private def readJson(path: Path): com.fasterxml.jackson.databind.JsonNode = {
+    val in = fs(path).open(path)
+    try new com.fasterxml.jackson.databind.ObjectMapper().readTree(in)
+    finally in.close()
   }
 
   /** Attach a small string-property sidecar (`_graft_meta.json`) to a
@@ -968,15 +948,7 @@ final case class PqRepo(spark: SparkSession, dataDir: String) {
     val p = tableMetaPath(schema, table)
     val f = fs(p)
     if (!f.exists(p)) return Map.empty
-    val in = f.open(p)
-    val json =
-      try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
-      finally in.close()
-    val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
-    val it = root.fields()
-    val b = Map.newBuilder[String, String]
-    while (it.hasNext) { val e = it.next(); b += e.getKey -> e.getValue.asText() }
-    b.result()
+    readJson(p).fields().asScala.map(e => e.getKey -> e.getValue.asText()).toMap
   }
 
   private def mergeManifestPath(schema: String, table: String): Path =
@@ -994,23 +966,13 @@ final case class PqRepo(spark: SparkSession, dataDir: String) {
     }.mkString(
       s"""{"table":"$table","tmp":"${mergeTmpPath(schema, table)}","partitions":[""",
       ",", "]}")
-    val out = fs(manifest).create(manifest, true)
-    try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    writeFile(fs(manifest), manifest,
+      json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
   }
 
-  private def readMergeManifest(manifest: Path): Seq[(String, Boolean)] = {
-    val in = fs(manifest).open(manifest)
-    val json =
-      try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
-      finally in.close()
-    val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
-    val parts = root.get("partitions")
-    (0 until parts.size()).map { i =>
-      val e = parts.get(i)
-      e.get("dir").asText() -> e.get("hasNew").asBoolean()
-    }
-  }
+  private def readMergeManifest(manifest: Path): Seq[(String, Boolean)] =
+    readJson(manifest).get("partitions").elements().asScala
+      .map(e => e.get("dir").asText() -> e.get("hasNew").asBoolean()).toSeq
 
   /** Z-ordered write: rows are laid out along the Morton curve of
     * `zCols`, so every output file covers a small hyper-rectangle in ALL

@@ -194,6 +194,32 @@ class IndexPersistSpec extends SparkSpec {
       .assigned.count() == emb.count() + 1)
   }
 
+  test("appendToIvfIndex is exact for a non-deterministic batch: no " +
+    "cluster partition is replaced by the batch rows alone") {
+    val repo = PqRepo(spark, Files.createTempDirectory("idx_nd").toString)
+    val built = Similarity.ivfBuild(emb, "vec_id", "embedding",
+      numCentroids = 8, kmeansIters = 1)
+    Similarity.writeIvfIndex(repo, built, "ann", "nd")
+    // one donor embedding per cluster: the batch vector (and so its
+    // cluster) is redrawn each time the batch is evaluated
+    val donorIds = built.assigned.select("id", "cluster").collect()
+      .groupBy(_.getInt(1)).values.map(_.head.getLong(0)).toSeq
+    val donors = emb.filter(col("vec_id").isin(donorIds: _*)).collect()
+      .map(_.getSeq[Float](1).toSeq).toSeq
+    assert(donors.size > 1)
+    val randomVec = udf(() => donors(scala.util.Random.nextInt(donors.size)))
+      .asNondeterministic()
+    (0L until 5L).foreach { i =>
+      Similarity.appendToIvfIndex(repo,
+        spark.range(1).select(lit(1000000L + i).as("vec_id"),
+          randomVec().as("embedding")),
+        "vec_id", "embedding", "ann", "nd")
+    }
+    val ids = Similarity.readIvfIndex(repo, "ann", "nd").assigned
+      .collect().map(_.getAs[Long]("id"))
+    assert(ids.length == emb.count() + 5 && ids.distinct.length == ids.length)
+  }
+
   test("reassignIvfIndex: moved ids land once in their new cluster, " +
     "untouched partitions stay byte-identical, search ≡ same-centroid rebuild") {
     val repo = PqRepo(spark, Files.createTempDirectory("idx_rsn").toString)

@@ -539,7 +539,7 @@ class VocabCoverageSpec extends SparkSpec {
     val docs = Seq((1L, "the the cat"), (2L, "the dog")).toDF("doc_id", "text")
     val out = TfIdf.vocabularyCoverage(docs, "doc_id", "text", vocabSize = 1)
     out.collect()
-    // after materializeOnce the executed plan consumes the checkpointed
+    // after Materialize.once the executed plan consumes the checkpointed
     // tf rows — the tokenize expression appears in NEITHER branch
     val plan = out.queryExecution.executedPlan.toString
     assert(!plan.contains("graft_token_counts"),

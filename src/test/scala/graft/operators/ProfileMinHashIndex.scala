@@ -56,7 +56,7 @@ object ProfileMinHashIndex {
       graft.functions.expressions.MinHashSignature(
         org.apache.spark.sql.graft.ColumnBridge.expression(col("__t")),
         5, 64, 0)).as("sig")
-    val perDoc = t("sign+checkpoint b2")(Dedup.materializeOnce(
+    val perDoc = t("sign+checkpoint b2")(graft.Materialize.once(
       Dedup.fanOut(b2, col("id"))
         .select(col("id"), sigExpr, unhex(sha2(col("__t"), 256)).as("dig"))))
     val docsUpd = perDoc.withColumn("dbucket",

@@ -55,7 +55,7 @@ object ProfileSpans {
           slice(toks, lit(11), greatest(size(toks) - 10, lit(0))))).as("text"))
 
       // stage 1: kernel scan + checkpoint
-      val withWh = t("1 kernel+checkpoint")(Dedup.materializeOnce(
+      val withWh = t("1 kernel+checkpoint")(graft.Materialize.once(
         Dedup.fanOut(built
           .select(col("doc_id").as("__id"),
             org.apache.spark.sql.graft.ColumnBridge.column(

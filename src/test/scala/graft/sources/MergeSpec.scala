@@ -260,4 +260,22 @@ class MergeSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("subset"))
   }
+  test("mergePartitioned is exact for a non-deterministic batch: the " +
+    "rewrite scope and the written rows come from one evaluation") {
+    val repo = PqRepo(spark,
+      java.nio.file.Files.createTempDirectory("mergespec8").toString)
+    repo.writePartitioned((0 until 100).map(k => (k % 10, k.toLong, k * 1.0))
+      .toDF("day", "k", "v"), "s", "t", Seq("day"))
+    // rand() is seeded at analysis, so every read would agree; this UDF
+    // draws a fresh partition value each time the batch is evaluated
+    val randomDay = udf(() => scala.util.Random.nextInt(10)).asNondeterministic()
+    (1000L until 1005L).foreach { k =>
+      repo.mergePartitioned(Seq((k, -1.0)).toDF("k", "v")
+          .select(randomDay().as("day"), col("k"), col("v")),
+        "s", "t", keys = Seq("day", "k"), partitionCols = Seq("day"))
+    }
+    val keys = repo.table("s", "t").collect().map(_.getAs[Long]("k"))
+    assert(keys.sorted.toSeq == (0L until 100L) ++ (1000L until 1005L),
+      "every pre-existing row survives and each batch row lands once")
+  }
 }
